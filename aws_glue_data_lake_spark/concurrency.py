@@ -24,27 +24,28 @@ from typing import Callable, Sequence
 def run_jobs(*thunks: Callable, max_workers: int | None = None) -> list:
     """Run independent Spark-action thunks concurrently; results in order.
 
-    Falls through to a plain call for a single thunk (no pool, no extra
-    threads). Exceptions propagate: the first failing thunk's exception
-    is raised after all submitted thunks finish (staging side effects
-    land in per-thunk unique dirs, so a failed sibling leaves no shared
-    debris — the caller's commit never runs).
+    Returns ``[]`` for no thunks and falls through to a plain call for a
+    single thunk (no pool, no extra threads). Exceptions propagate: the
+    first failing thunk's exception is raised after all submitted thunks
+    finish (staging side effects land in per-thunk unique dirs, so a
+    failed sibling leaves no shared debris — the caller's commit never
+    runs).
     """
-    if len(thunks) == 1:
-        return [thunks[0]()]
-    try:
-        from pyspark import inheritable_thread_target
-        from pyspark.sql import SparkSession
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from pyspark import SparkContext, inheritable_thread_target
+    from pyspark.sql import SparkSession
 
+    wrapped: Sequence[Callable] = thunks
+    if SparkContext._active_spark_context is not None:
+        # without a context there are no job properties to inherit
         session = SparkSession.getActiveSession()
         wrap = (
             inheritable_thread_target(session)
             if session is not None  # Spark 4 form: also inherits tags
             else inheritable_thread_target
         )
-        wrapped: Sequence[Callable] = [wrap(t) for t in thunks]
-    except Exception:  # no active context (unit tests without Spark)
-        wrapped = thunks
+        wrapped = [wrap(t) for t in thunks]
     with ThreadPoolExecutor(
         max_workers=max_workers or min(len(thunks), 4)
     ) as pool:

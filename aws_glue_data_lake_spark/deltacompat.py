@@ -1179,15 +1179,10 @@ class DeltaTableReader:
                         }
                     )
 
-        # One slice per descriptor (cap 32): each row expands a whole DV
-        # blob in mapInPandas, so slices = concurrency, and a local_df
-        # avoids the 32-empty-pickle-task job a plain createDataFrame pays.
-        desc_df = local_df(
-            spark,
-            dv_rows,
-            "file_path string, dv string",
-            slices=min(len(dv_rows), 32),
-        )
+        # Each row expands a whole DV blob in mapInPandas; the local
+        # scan spreads the descriptors over the cores, so blobs expand
+        # concurrently.
+        desc_df = local_df(spark, dv_rows, "file_path string, dv string")
         tomb = desc_df.mapInPandas(expand, "file_path string, pos long")
         return scan.join(
             F.broadcast(tomb),
@@ -1232,7 +1227,7 @@ class DeltaTableReader:
             wanted = {os.path.abspath(p) for p in keep_paths}
             files = [f for f in files if os.path.abspath(f[0]) in wanted]
         if not files:
-            empty = spark.createDataFrame([], snap.schema)
+            empty = local_df(spark, [], snap.schema)
             return empty.selectExpr(
                 *out_cols,
                 "CAST(NULL AS LONG) AS __rt_sid",
@@ -1398,8 +1393,8 @@ class DeltaTableReader:
         rt_cols = [c for c in (_rt_cols or ()) if c]
         rt_fields = [StructField(c, LongType(), True) for c in rt_cols]
         if not snap.files:
-            return spark.createDataFrame(
-                [], StructType(list(snap.schema.fields) + rt_fields)
+            return local_df(
+                spark, [], StructType(list(snap.schema.fields) + rt_fields)
             )
         part_cols = snap.partition_columns
         phys = self._physical_name
@@ -1928,7 +1923,7 @@ class DeltaTableReader:
                 )
             )
         if not pieces:
-            return spark.createDataFrame([], full_st)
+            return local_df(spark, [], full_st)
         out = pieces[0]
         for p in pieces[1:]:
             out = out.unionByName(p)
@@ -6369,12 +6364,7 @@ class DeltaTableWriter:
                     )
 
             res = (
-                local_df(
-                    spark,
-                    [(p,) for p in candidates],
-                    "path string",
-                    slices=min(len(candidates), 32),
-                )
+                local_df(spark, [(p,) for p in candidates], "path string")
                 .mapInPandas(
                     _footer_scan, "path string, stale boolean"
                 )

@@ -72,6 +72,7 @@ from pyspark.sql.types import (
 
 from aws_glue_data_lake_spark.avrolite import read_container, write_container
 from aws_glue_data_lake_spark.concurrency import run_jobs
+from aws_glue_data_lake_spark.fieldids import group_paths_by_physical_schema
 from aws_glue_data_lake_spark.localdf import local_df
 
 
@@ -1029,12 +1030,9 @@ class IcebergTableReader:
                         out[with_source_path] = p
                     yield out
 
-        # slices = file-read concurrency (cap 64); local_df skips the
-        # 32-pickle-slice default AND the repartition shuffle it forced.
-        src = local_df(
-            spark, [(p,) for p in paths], "path string",
-            slices=min(len(paths), 64),
-        )
+        # the local scan spreads the paths over the cores: one
+        # concurrent file read per partition, no shuffle
+        src = local_df(spark, [(p,) for p in paths], "path string")
         return src.mapInPandas(gen, out_schema_ddl)
 
     @staticmethod
@@ -1104,10 +1102,7 @@ class IcebergTableReader:
                     out["__del_pos"] = list(range(n_rows))
                     yield out
 
-        src = local_df(
-            spark, [(p,) for p in paths], "path string",
-            slices=min(len(paths), 64),
-        )
+        src = local_df(spark, [(p,) for p in paths], "path string")
         return src.mapInPandas(gen, out_st)
 
     @staticmethod
@@ -1147,7 +1142,6 @@ class IcebergTableReader:
             spark,
             [(puf, ref, off, size) for puf, ref, off, size in dvs],
             "puffin string, ref string, off long, size long",
-            slices=min(len(dvs), 32),
         )
         return desc.mapInPandas(expand_dvs, "file_path string, pos long")
 
@@ -1674,7 +1668,7 @@ class IcebergTableReader:
                     )
                 ]
             )
-            return spark.createDataFrame([], empty_st)
+            return local_df(spark, [], empty_st)
         # Column resolution, per the spec's rules (spec § Column
         # Projection: 'Values for field ids which are not present in a
         # data file must be resolved' — field IDs first, then the name
@@ -2165,15 +2159,12 @@ class IcebergTableReader:
                     dm_key = F.regexp_replace(
                         F.col("_metadata.file_path"), "^file:(//)?", ""
                     ).alias("__dm_key")
-                    # name-resolved delete files read WITHOUT a pinned
-                    # schema: their physical int width may differ from
-                    # the table type (e.g. INT64 bytes for an `int`
-                    # column) and the anti-join condition casts anyway —
-                    # pinning would hard-fail the vectorized reader
-                    eq_name_sel = [
-                        F.col(c).cast(type_of[c]).alias(f"__eq_{c}")
-                        for c in names
-                    ]
+
+                    def eq_sel(phys: list[str]) -> list:
+                        return [
+                            F.col(pc).cast(type_of[c]).alias(f"__eq_{c}")
+                            for c, pc in zip(names, phys)
+                        ]
                     by_f: dict[str, list[str]] = {}
                     for p in paths:
                         by_f.setdefault(
@@ -2209,24 +2200,17 @@ class IcebergTableReader:
                         if f2 != "PARQUET":
                             parts.append(
                                 spark.read.orc(*ps).select(
-                                    *eq_name_sel, dm_key
+                                    *eq_sel(list(names)), dm_key
                                 )
                             )
                             continue
                         for m, mps in group_paths_by_mapping(
                             ps, parquet_field_id_mappings(ps)
                         ):
-                            if not m:
-                                parts.append(
-                                    spark.read.parquet(*mps).select(
-                                        *eq_name_sel, dm_key
-                                    )
-                                )
-                                continue
                             missing = [
                                 c
                                 for c in names
-                                if snap.field_ids.get(c) not in m
+                                if m and snap.field_ids.get(c) not in m
                             ]
                             if missing:
                                 raise IcebergProtocolError(
@@ -2234,17 +2218,25 @@ class IcebergTableReader:
                                     f"equality field(s) {missing}: "
                                     f"{mps[:3]}"
                                 )
-                            parts.append(
-                                spark.read.parquet(*mps).select(
-                                    *[
-                                        F.col(m[snap.field_ids[c]])
-                                        .cast(type_of[c])
-                                        .alias(f"__eq_{c}")
-                                        for c in names
-                                    ],
-                                    dm_key,
+                            phys = [
+                                m[snap.field_ids[c]] if m else c
+                                for c in names
+                            ]
+                            # pinned to each file's PHYSICAL types (no
+                            # inference job); the cast to the table type
+                            # stays, as the bytes may be wider (INT64 for
+                            # an `int` column)
+                            for st, gps in group_paths_by_physical_schema(
+                                mps, phys
+                            ):
+                                rd = spark.read
+                                if st is not None:
+                                    rd = rd.schema(st)
+                                parts.append(
+                                    rd.parquet(*gps).select(
+                                        *eq_sel(phys), dm_key
+                                    )
                                 )
-                            )
                     out = parts[0]
                     for g2 in parts[1:]:
                         out = out.unionByName(g2)
@@ -2522,7 +2514,15 @@ class IcebergTableReader:
                     "left",
                 )
                 for dpath, names, dseq in sorted(eq_dels):
-                    drows = spark.read.parquet(dpath).select(
+                    # pinned to the footer's physical types: no
+                    # schema-inference job per delete file
+                    ((st, _),) = group_paths_by_physical_schema(
+                        [dpath], list(names)
+                    )
+                    rd = spark.read
+                    if st is not None:
+                        rd = rd.schema(st)
+                    drows = rd.parquet(dpath).select(
                         *[F.col(c).alias(f"__eq_{c}") for c in names]
                     )
                     cond = F.lit(int(dseq)) > F.col("__seq")
@@ -2601,7 +2601,7 @@ class IcebergTableReader:
                     )
                 )
         if not pieces:
-            return spark.createDataFrame([], full_st)
+            return local_df(spark, [], full_st)
         out = pieces[0]
         for p in pieces[1:]:
             out = out.unionByName(p)

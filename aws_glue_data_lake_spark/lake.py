@@ -65,6 +65,8 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aws_glue_data_lake_spark.localdf import local_df
+
 
 class CommitConflict(Exception):
     """Another writer committed the same version first; reload and retry."""
@@ -957,7 +959,7 @@ class LakeTable:
         if affected:
             live = self._read_files(spark, [f["path"] for f in affected], prev)
         else:
-            live = spark.createDataFrame([], prev.schema)
+            live = local_df(spark, [], prev.schema)
         tgt = live.withColumn("_tgt", F.lit(True)).alias("target")
         src = source.withColumn("_src", F.lit(True)).alias("source")
         cond = [
@@ -1133,7 +1135,7 @@ class LakeTable:
                 if all(f.get("partition", {}).get(k) == v for k, v in want.items())
             ]
         if not files:
-            return spark.createDataFrame([], snap.schema)
+            return local_df(spark, [], snap.schema)
         return self._read_files(spark, [f["path"] for f in files], snap)
 
     def stat_max(self, col: str, version: int | None = None):
@@ -1422,7 +1424,7 @@ class LakeTable:
 
         files = [f for f in snap.files if overlaps(f)]
         if not files:
-            return spark.createDataFrame([], snap.schema)
+            return local_df(spark, [], snap.schema)
         df = self._read_files(spark, [f["path"] for f in files], snap)
         for col, (lo, hi) in ranges.items():
             if lo is not None:

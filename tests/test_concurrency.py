@@ -841,6 +841,43 @@ def test_run_jobs_propagates_exception_after_all_finish(spark):
     assert done["other"]
 
 
+def test_run_jobs_no_thunks_returns_empty():
+    from aws_glue_data_lake_spark.concurrency import run_jobs
+
+    assert run_jobs() == []
+
+
+def test_run_jobs_without_spark_context_runs_plain(spark, monkeypatch):
+    """No active SparkContext: no job properties to inherit, so the
+    thunks run unwrapped — and only that case skips the wrapper."""
+    import pyspark
+    from pyspark import SparkContext
+
+    from aws_glue_data_lake_spark.concurrency import run_jobs
+
+    def must_not_wrap(*_a, **_k):
+        raise AssertionError("wrapped without a context")
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", must_not_wrap)
+    assert run_jobs(lambda: 1, lambda: 2) == [1, 2]
+
+
+def test_run_jobs_wrapper_errors_are_not_swallowed(spark, monkeypatch):
+    """With a live context, a failing wrapper is a bug to surface, not
+    a reason to run the thunks without their job group and tags."""
+    import pyspark
+
+    from aws_glue_data_lake_spark.concurrency import run_jobs
+
+    def broken(*_a, **_k):
+        raise RuntimeError("wrapper broke")
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", broken)
+    with pytest.raises(RuntimeError, match="wrapper broke"):
+        run_jobs(lambda: 1, lambda: 2)
+
+
 def test_delta_merge_cdf_staged_concurrently_matches_content(
     spark, tmp_path
 ):

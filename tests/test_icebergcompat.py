@@ -640,6 +640,77 @@ def test_equality_deletes_merge_on_read(spark, tmp_path):
     assert r.to_df(spark, snapshot_id=first_sid).count() == 4
 
 
+def test_group_paths_by_physical_schema(tmp_path):
+    """Delete files group by the Spark reading of their footers: one
+    pinned schema per physical layout (INT32 and INT64 bytes for one
+    column never share a scan); a missing column or a footer type whose
+    Spark reading is ambiguous (INT96-style nanosecond timestamps) puts
+    the file in the unpinned ``None`` group."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType, LongType
+
+    from aws_glue_data_lake_spark.fieldids import (
+        group_paths_by_physical_schema,
+    )
+
+    def write(name, table):
+        p = str(tmp_path / name)
+        pq.write_table(table, p)
+        return p
+
+    i32 = write("a.parquet", pa.table({"k": pa.array([1], pa.int32())}))
+    i64a = write("b.parquet", pa.table({"k": pa.array([2], pa.int64())}))
+    i64b = write("c.parquet", pa.table({"k": pa.array([3], pa.int64())}))
+    other = write("d.parquet", pa.table({"j": pa.array([4], pa.int64())}))
+    nanos = write(
+        "e.parquet",
+        pa.table({"k": pa.array([5], pa.timestamp("ns"))}),
+    )
+    groups = dict(
+        (None if st is None else st.fields[0].dataType, ps)
+        for st, ps in group_paths_by_physical_schema(
+            [i32, i64a, other, i64b, nanos], ["k"]
+        )
+    )
+    assert groups == {
+        IntegerType(): [i32],
+        LongType(): [i64a, i64b],
+        None: [other, nanos],
+    }
+
+
+def test_equality_delete_reads_pin_physical_widths(spark, tmp_path):
+    """Equality-delete files whose key bytes are narrower than the table
+    type (an INT32 file for a `long` column) read pinned to their own
+    physical schema and cast to the table type: results match the
+    unpinned read, and building the read plans runs no schema-inference
+    job."""
+    path = str(tmp_path / "eqw")
+    w = IcebergTableWriter(path)
+    r = w.create(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(1, 7)], "k long, v string"
+        )
+    )
+    w.equality_delete(spark.createDataFrame([(2,), (3,)], "k int"))
+    w.equality_delete(spark.createDataFrame([(5,)], "k long"))
+    sc = spark.sparkContext
+    group = "eq-delete-pinned-read"
+    sc.setJobGroup(group, "plan only")
+    try:
+        tip = r.to_df(spark)
+        ch = r.changes(spark)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert sorted(x.k for x in tip.collect()) == [1, 4, 6]
+    deleted = sorted(
+        x.k for x in ch.collect() if x._change_type == "delete"
+    )
+    assert deleted == [2, 3, 5]
+
+
 def test_equality_delete_same_commit_semantics(spark, tmp_path):
     """The spec's strict-inequality gate: an equality delete does NOT
     apply to data files with the SAME sequence number (rows written in
